@@ -60,8 +60,10 @@ object SparkEntry {
     * dumps a rounded double (q32/q38/q63/q66 — the q17-style raw-double
     * dumps and the cast-to-long vertex hashes have no signed-zero hazard).
     */
-  private def roundZ(c: org.apache.spark.sql.Column, d: Int): org.apache.spark.sql.Column =
-    when(round(c, d) === 0.0, c * lit(0.0)).otherwise(round(c, d))
+  private def roundZ(c: org.apache.spark.sql.Column, d: Int): org.apache.spark.sql.Column = {
+    val r = round(c, d)
+    when(r === 0.0, c * lit(0.0)).otherwise(r)
+  }
 
   /** Flagship: interleaved docs table → span extraction → WKT parse →
     * z15 cell encode → broadcast PIP join against regions → per-region

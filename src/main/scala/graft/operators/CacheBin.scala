@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Lifecycle registry for operator-persisted frames (round-5 advice: the
-  * Dedup/Knn `materialize` persists — MEMORY_AND_DISK, so NOT evicted by
+  * Dedup `materialize` persists — MEMORY_AND_DISK, so NOT evicted by
   * block-manager LRU once spilled — were never unpersisted, accumulating
   * for the life of the SparkContext in a long-lived session running many
   * operators).
