@@ -11,7 +11,15 @@ import org.apache.spark.sql.SparkSession
   *   - per-query JOB COUNT (driver barriers show up as extra serialized
   *     jobs before the main action),
   *   - shuffle bytes/records, scan records, spill, GC time from a stage
-  *     listener.
+  *     listener,
+  *   - with SPARK_GRAFT_EXPLAIN set, each query's physical plan (stderr,
+  *     first repeat; AQE's initial plan, since the noop write runs its own
+  *     query execution); this replaces the deleted Explain main.
+  *
+  * Round-4 finding from these shuffle counters: the kNN `row_number` window
+  * filtered by rk <= k already runs a map-side partial top-k
+  * (InferWindowGroupLimit), so a hand-rolled one moved identical shuffle
+  * bytes and was removed.
   *
   * usage: SPARK_GRAFT_BENCH_ONLY=q21_knn_cell,q12_knn \
   *        SPARK_GRAFT_REPEATS=3 sbt "runMain graft.BenchExtra"

@@ -2,7 +2,7 @@ package org.apache.spark.graftshim
 
 import org.apache.spark.SparkContext
 
-/** Deterministic listener drain for metric probes (ShuffleProbe, the
+/** Deterministic listener drain for metric probes (BenchExtra, the
   * OperatorsSpec skew probe): `SparkContext.listenerBus` is
   * `private[spark]`, so this one-line accessor lives in an
   * org.apache.spark subpackage. `LiveListenerBus.waitUntilEmpty` itself

@@ -92,12 +92,7 @@ object Knn {
             val stride = files.length.toDouble / MaxFooterSamples
             Array.tabulate(MaxFooterSamples)(i => files((i * stride).toInt))
           }
-        val sampleRows = sampled.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
+        val sampleRows = sampled.map(graft.sources.Footers.fileRowCount(_, conf)).sum
         if (sampled.length == files.length) sampleRows
         else math.round(sampleRows.toDouble / sampled.length * files.length)
       } else {

@@ -12,9 +12,8 @@ import org.apache.spark.sql.DataFrame
   * scan carries ≫ cores splits and the CONDITION (not the repartition)
   * is what survives the 100× scale-up — the exchange never fires there.
   *
-  * This is the operator-level twin of SparkEntry.spread (the gate-level
-  * helper): same estimate, same condition, shared by Knn / SpatialJoin /
-  * Curation kernels.
+  * The one spread helper: SparkEntry's kernel-heavy gates and the
+  * SpatialJoin / Curation / Dedup / DocsTable kernel stages all call it.
   */
 object Spread {
 
@@ -42,7 +41,11 @@ object Spread {
     val nFiles = df.inputFiles.length
     val bytes = plan.stats.sizeInBytes
     val maxPart = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-    val estSplits = math.max(nFiles.toLong, (bytes / maxPart).toLong)
+    // clamp before .toLong: joins over sources with the huge default size
+    // multiply BigInt stats past the Long range, and a wrapped estimate
+    // would read as "few splits" and add a useless exchange mid-plan
+    val byBytes = (bytes / maxPart).min(BigInt(Long.MaxValue)).toLong
+    val estSplits = math.max(nFiles.toLong, byBytes)
     if (estSplits < cores) df.repartition(cores) else df
   }
 }

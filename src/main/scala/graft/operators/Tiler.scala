@@ -21,22 +21,22 @@ object Tiler {
     * geometry envelope at zoom z. `srid` picks the grid: 4326 (lon/lat
     * degrees, the docs pipeline) or 3857 (web-mercator meters).
     */
-  def assignTiles(geoms: DataFrame, idCol: String, z: Int, srid: Int = 4326): DataFrame = {
-    // no env-isNotNull filter (round 7, measured): st_tiles_for_bounds is
-    // null-intolerant, so a null envelope yields a null cover and explode()
-    // drops the row — same output, and the filter's presence made Catalyst
-    // evaluate the whole upstream geometry expression TWICE per row (once
-    // in the collapsed filter, once in the explode input projection)
-    val env = geoms
-      .withColumn("env", st_envelope(col("geom")))
-    val tiles =
-      if (srid == 3857)
-        st_tiles_for_bounds_3857(col("env.minx"), col("env.miny"),
-          col("env.maxx"), col("env.maxy"), lit(z))
-      else
-        st_tiles_for_bounds(col("env.minx"), col("env.miny"),
-          col("env.maxx"), col("env.maxy"), lit(z))
-    env.select(col(idCol), explode(tiles).as("cell"))
+  def assignTiles(geoms: DataFrame, idCol: String, z: Int, srid: Int = 4326): DataFrame =
+    withCoverCells(geoms, z, srid).select(col(idCol), col("cell"))
+
+  /** `geoms` with one row per zoom-z tile covering the envelope of `geom`
+    * (column "cell", on the `srid` grid). No env-isNotNull filter (round
+    * 7, measured): st_tiles_for_bounds is null-intolerant, so a null
+    * envelope yields a null cover and explode() drops the row — same
+    * output, and the filter's presence made Catalyst evaluate the whole
+    * upstream geometry expression TWICE per row (once in the collapsed
+    * filter, once in the explode input projection).
+    */
+  private def withCoverCells(geoms: DataFrame, z: Int, srid: Int): DataFrame = {
+    val cover = if (srid == 3857) st_tiles_for_bounds_3857 _ else st_tiles_for_bounds _
+    geoms.withColumn("env", st_envelope(col("geom")))
+      .withColumn("cell", explode(cover(col("env.minx"), col("env.miny"),
+        col("env.maxx"), col("env.maxy"), lit(z))))
   }
 
   /** per-tile feature counts rolled up across several zooms in one pass:
@@ -57,12 +57,6 @@ object Tiler {
         st_cell_y(col("cell")).as("y"), col("n_features"))
   }
 
-  /** Full MVT tile sink: geometries → per-tile protobuf bytes.
-    * Pipeline: envelope tile assignment (explode) → per-row tile-space
-    * projection + command-stream encode (scalar expressions, codegen
-    * pipeline, no shuffle) → ONE shuffle grouping by the packed cell id →
-    * layer/tile assembly per group. Emits (z, x, y, mvt binary).
-    */
   /** shared map-side sink front: inline cell assignment (explode carries
     * the geometry column — the round-2 assignTiles ⋈ geoms form evaluated
     * the input twice and paid a join shuffle for nothing), tile-space
@@ -70,18 +64,7 @@ object Tiler {
     * per-row expressions, no shuffle.
     */
   private def mvtPrep(geoms: DataFrame, z: Int, srid: Int): DataFrame = {
-    // same as assignTiles: explode(null cover) drops null-envelope rows;
-    // the former filter doubled the upstream makevalid+parse evaluation
-    val env = geoms
-      .withColumn("env", st_envelope(col("geom")))
-    val tiles =
-      if (srid == 3857)
-        st_tiles_for_bounds_3857(col("env.minx"), col("env.miny"),
-          col("env.maxx"), col("env.maxy"), lit(z))
-      else
-        st_tiles_for_bounds(col("env.minx"), col("env.miny"),
-          col("env.maxx"), col("env.maxy"), lit(z))
-    val withCell = env.withColumn("cell", explode(tiles))
+    val withCell = withCoverCells(geoms, z, srid)
     val prepped =
       if (srid == 3857)
         withCell
@@ -94,120 +77,100 @@ object Tiler {
     prepped.withColumn("mvt", st_mvt_geometry(col("prep")))
   }
 
+  /** Full MVT tile sink: geometries → per-tile protobuf bytes, one layer
+    * named `layerName`. Pipeline: envelope tile assignment (explode) →
+    * per-row tile-space projection + command-stream encode (scalar
+    * expressions, codegen pipeline, no shuffle) → ONE shuffle grouping by
+    * the packed cell id → streaming tile assembly (`assembleTiles`).
+    * Emits (z, x, y, mvt binary).
+    *
+    * Extra property columns ride the same shuffle as typed tag values
+    * (MvtTile.TagValue.of per the Spark column type — string/int/double/
+    * bool/…, reference layer.go:133-190); "fid" stays the first tag, so
+    * with propCols = Nil the tile bytes are unchanged. NULL props are
+    * dropped per-feature like the reference drops nil tags.
+    */
   def mvtTiles(spark: org.apache.spark.sql.SparkSession, geoms: DataFrame,
                idCol: String, z: Int, layerName: String, srid: Int = 4326,
-               propCols: Seq[String] = Nil): DataFrame = {
-    import spark.implicits._
-    import graft.core.{MvtTile, Slippy}
-    val assigned = mvtPrep(geoms, z, srid)
-      .select(Seq(col("cell"), col(idCol).cast("string").as("fid"),
-        col("mvt.commands").as("commands"), col("mvt.geom_type").as("gtype")) ++
-        propCols.map(col): _*)
-    // DETERMINISTIC + STREAMING tile assembly (round-3): the round-2
-    // groupByKey/mapGroups form assembled features in shuffle arrival
-    // order, so re-running the sink could produce byte-different (though
-    // semantically equal) tiles — unacceptable for a byte-level gate and
-    // for exact checkpoint resume. Features are now shuffled by cell and
-    // SORTED WITHIN PARTITIONS by (cell, fid): a single forward walk per
-    // partition groups consecutive rows of one tile and feeds them to the
-    // streaming layer encoder — per-tile memory stays bounded at the
-    // output bytes + key/value maps (never the feature list), and the
-    // per-feature heavy work (projection + command encode) happened
-    // map-side before the shuffle. Sort-based grouping replaces the hash
-    // group's in-memory map with spillable sort machinery — the standard
-    // 100 TB shape.
-    // Extra property columns ride the same shuffle as typed tag values
-    // (MvtTile.TagValue.of per the Spark column type — string/int/double/
-    // bool/…, reference layer.go:133-190); "fid" stays the first tag, so
-    // with propCols = Nil the tile bytes are unchanged. NULL props are
-    // dropped per-feature like the reference drops nil tags.
-    val propNames = propCols.toIndexedSeq
-    val nFixed = 4 // cell, fid, commands, gtype
-    assigned
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("fid"))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Int, Long, Long, Array[Byte])] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (Int, Long, Long, Array[Byte]) = {
-            val cell = buf.head.getLong(0)
-            var i = 0L
-            val featIt = new Iterator[MvtTile.Feature] {
-              def hasNext: Boolean = buf.hasNext && buf.head.getLong(0) == cell
-              def next(): MvtTile.Feature = {
-                val r = buf.next()
-                i += 1
-                // zero-copy: the row holds the command longs in a primitive
-                // array (ArraySeq.ofLong) — rewrap instead of boxing a copy
-                // (the round-3 micro-pass invariant, kept on the Row path)
-                val cmds: IndexedSeq[Long] = r.getSeq[Long](2) match {
-                  case as: scala.collection.immutable.ArraySeq[Long] => as
-                  case other => other.toIndexedSeq
-                }
-                val props = Vector.newBuilder[(String, MvtTile.TagValue)]
-                props += (("fid", MvtTile.TagValue.VString(r.getString(1))))
-                var p = 0
-                while (p < propNames.length) {
-                  val v = r.get(nFixed + p)
-                  if (v != null) props += ((propNames(p), MvtTile.TagValue.of(v)))
-                  p += 1
-                }
-                MvtTile.Feature(i, r.getInt(3), cmds, props.result())
-              }
-            }
-            val layerBytes = MvtTile.encodeLayerStream(layerName, featIt)
-            val bytes = MvtTile.encodeTileFromLayerBytes(Vector(layerBytes))
-            (Slippy.unpackZ(cell), Slippy.unpackX(cell), Slippy.unpackY(cell), bytes)
-          }
-        }
-      }
-      .toDF("z", "x", "y", "mvt")
-  }
+               propCols: Seq[String] = Nil): DataFrame =
+    assembleTiles(spark, mvtPrep(geoms, z, srid), idCol, Left(layerName), propCols)
 
   /** Multi-LAYER MVT tile sink (reference tile.go: a Tile holds repeated
-    * Layer messages): same deterministic streaming shape as `mvtTiles`,
-    * with `layerCol` naming each feature's layer. One shuffle on the
-    * packed cell, in-partition sort by (cell, layer, fid): a forward walk
-    * emits one tile per cell, streaming each consecutive layer run
-    * through the layer encoder and framing the finished layers into the
-    * tile — layers appear in layer-name order (deterministic bytes),
-    * per-tile memory stays bounded at the output bytes + one layer's
-    * key/value maps.
+    * Layer messages): `mvtTiles` with `layerCol` naming each feature's
+    * layer. Layers appear in layer-name order (deterministic bytes).
     */
   def mvtTilesLayered(spark: org.apache.spark.sql.SparkSession, geoms: DataFrame,
                       idCol: String, z: Int, layerCol: String,
-                      srid: Int = 4326): DataFrame = {
+                      srid: Int = 4326): DataFrame =
+    assembleTiles(spark, mvtPrep(geoms, z, srid), idCol, Right(layerCol), Nil)
+
+  /** Streaming tile assembly shared by both sinks. Features are shuffled
+    * by cell and sorted within partitions by (cell, fid), or (cell, layer,
+    * fid) when the layer is a column, so a tile's bytes never depend on
+    * shuffle arrival order: the byte-level gates and exact checkpoint
+    * resume need that. One forward walk per partition emits one tile per
+    * cell, streaming each consecutive layer run through the layer encoder
+    * and framing the finished layers into the tile. Per-tile memory stays
+    * bounded at the output bytes + one layer's key/value maps (never the
+    * feature list); the per-feature heavy work (projection + command
+    * encode) ran map-side before the shuffle, and the grouping is Spark's
+    * spillable sort, not an in-memory hash group.
+    *
+    * `layer` is the fixed layer name (Left) or the layer column (Right);
+    * a fixed name adds no column to the shuffle.
+    */
+  private def assembleTiles(spark: org.apache.spark.sql.SparkSession, prepped: DataFrame,
+                            idCol: String, layer: Either[String, String],
+                            propCols: Seq[String]): DataFrame = {
     import spark.implicits._
     import graft.core.{MvtTile, Slippy}
-    mvtPrep(geoms, z, srid)
-      .select(col("cell"), col(layerCol).cast("string").as("layer"),
-        col(idCol).cast("string").as("fid"),
-        col("mvt.commands").as("commands"), col("mvt.geom_type").as("gtype"))
+    val byLayer = layer.isRight
+    val name = layer.merge // the fixed layer name, or the layer column
+    val layerCols = if (byLayer) Seq(col(name).cast("string").as("layer")) else Nil
+    val sortKeys = if (byLayer) Seq("cell", "layer", "fid") else Seq("cell", "fid")
+    // row layout: cell, fid, commands, gtype, [layer], props…
+    val nFixed = 4 + layerCols.length
+    val propNames = propCols.toIndexedSeq
+    prepped
+      .select(Seq(col("cell"), col(idCol).cast("string").as("fid"),
+        col("mvt.commands").as("commands"), col("mvt.geom_type").as("gtype")) ++
+        layerCols ++ propCols.map(col): _*)
       .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("layer"), col("fid"))
+      .sortWithinPartitions(sortKeys.map(col): _*)
       .mapPartitions { it =>
         val buf = it.buffered
+        def layerOf(r: org.apache.spark.sql.Row): String =
+          if (byLayer) r.getString(4) else name
         new Iterator[(Int, Long, Long, Array[Byte])] {
           def hasNext: Boolean = buf.hasNext
           def next(): (Int, Long, Long, Array[Byte]) = {
             val cell = buf.head.getLong(0)
             val layers = Vector.newBuilder[Array[Byte]]
             while (buf.hasNext && buf.head.getLong(0) == cell) {
-              val layerName = buf.head.getString(1)
+              val layerName = layerOf(buf.head)
               var i = 0L
               val featIt = new Iterator[MvtTile.Feature] {
                 def hasNext: Boolean = buf.hasNext &&
-                  buf.head.getLong(0) == cell && buf.head.getString(1) == layerName
+                  buf.head.getLong(0) == cell && layerOf(buf.head) == layerName
                 def next(): MvtTile.Feature = {
                   val r = buf.next()
                   i += 1
-                  val cmds: IndexedSeq[Long] = r.getSeq[Long](3) match {
+                  // zero-copy: the row holds the command longs in a primitive
+                  // array (ArraySeq.ofLong) — rewrap instead of boxing a copy
+                  // (the round-3 micro-pass invariant, kept on the Row path)
+                  val cmds: IndexedSeq[Long] = r.getSeq[Long](2) match {
                     case as: scala.collection.immutable.ArraySeq[Long] => as
                     case other => other.toIndexedSeq
                   }
-                  MvtTile.Feature(i, r.getInt(4), cmds,
-                    Vector(("fid", MvtTile.TagValue.VString(r.getString(2)))))
+                  val props = Vector.newBuilder[(String, MvtTile.TagValue)]
+                  props += (("fid", MvtTile.TagValue.VString(r.getString(1))))
+                  var p = 0
+                  while (p < propNames.length) {
+                    val v = r.get(nFixed + p)
+                    if (v != null) props += ((propNames(p), MvtTile.TagValue.of(v)))
+                    p += 1
+                  }
+                  MvtTile.Feature(i, r.getInt(3), cmds, props.result())
                 }
               }
               layers += MvtTile.encodeLayerStream(layerName, featIt)

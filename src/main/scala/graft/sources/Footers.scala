@@ -22,6 +22,15 @@ object Footers {
 
   private val PoolSize = 16
 
+  /** row count of one parquet file, read from its footer (no data pages) */
+  private[graft] def fileRowCount(file: String,
+                                  conf: org.apache.hadoop.conf.Configuration): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new org.apache.hadoop.fs.Path(file), conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getRecordCount finally r.close()
+  }
+
   private def distributedThreshold(spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.get("spark.graft.footers.distributedThreshold", "4096").toInt
 
@@ -37,12 +46,7 @@ object Footers {
     val slices = math.max(1, math.min(files.length,
       spark.sparkContext.defaultParallelism * 4))
     spark.sparkContext.parallelize(files.toIndexedSeq, slices)
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f), bc.value.value)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
+      .map(f => fileRowCount(f, bc.value.value))
       .fold(0L)(_ + _)
   }.toOption
 
@@ -71,12 +75,7 @@ object Footers {
     try {
       val futs = files.map { f =>
         pool.submit(new java.util.concurrent.Callable[Long] {
-          override def call(): Long = {
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getRecordCount finally r.close()
-          }
+          override def call(): Long = fileRowCount(f, conf)
         })
       }
       // any footer-read failure (file deleted between planning and read,

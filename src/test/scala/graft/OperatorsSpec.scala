@@ -727,6 +727,24 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("one tile walk: a constant layer column gives mvtTiles' bytes on the q33 input") {
+    import graft.functions.GeomFunctions.st_makevalid
+    val nan = lit(Double.NaN)
+    val fixed = graft.SparkEntry.q33Input(spark, dir)
+      .select(col("pid"), col("geom"))
+      .dropDuplicates("pid")
+      .withColumn("geom", st_makevalid(col("geom"), nan, nan, nan, nan))
+    def tiles(df: DataFrame): Map[(Long, Long), Array[Byte]] =
+      df.collect().map(r => ((r.getLong(1), r.getLong(2)), r.getAs[Array[Byte]]("mvt"))).toMap
+    val single = tiles(Tiler.mvtTiles(spark, fixed, "pid", 9, "features", srid = 3857))
+    val layered = tiles(Tiler.mvtTilesLayered(spark,
+      fixed.withColumn("lyr", lit("features")), "pid", 9, "lyr", srid = 3857))
+    assert(single.nonEmpty && single.keySet == layered.keySet)
+    single.foreach { case (k, b) =>
+      assert(java.util.Arrays.equals(b, layered(k)), s"tile $k bytes differ")
+    }
+  }
+
   test("mvt layer key/value dedup across features") {
     import graft.core.MvtTile._
     val layer = Layer("t", Vector(
